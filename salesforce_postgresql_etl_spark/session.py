@@ -30,6 +30,10 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # sources/sf_datasource.py pushes the watermark bound into its scan;
+    # without this Spark 4.1 rejects any read of a Python source that
+    # implements pushFilters (DATA_SOURCE_PUSHDOWN_DISABLED).
+    "spark.sql.python.filterPushdown.enabled": "true",
     # r13 OPT (guide §4.4's duplicated-expression trap, pure-JVM form):
     # InferFiltersFromGenerate adds `size(t) > 0 AND isnotnull(t)`
     # above every explode/posexplode while the array is still an alias;

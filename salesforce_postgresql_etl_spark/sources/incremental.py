@@ -52,8 +52,9 @@ def incremental_extract(
     """Rows newer than the stored watermark (all rows on first run).
 
     The `ts > wm` predicate reaches the parquet scan (PushedFilters) /
-    the JDBC WHERE clause — only changed rows are read, which is the
-    whole point at 100 TB.
+    the JDBC WHERE clause / the ``sf_model`` reader (``pushFilters``:
+    older records are skipped before conversion) — only changed rows
+    are materialised, which is the whole point at 100 TB.
 
     ``lag_seconds``: visibility-lag overlap. The strict ``ts > wm``
     filter assumes monotonic visibility — a row committed with
@@ -75,11 +76,17 @@ def incremental_extract(
     return df.where(F.col(ts_col) > cutoff)
 
 
+def record_watermark(store: WatermarkStore, table: str, max_ts) -> str | None:
+    """Store an already-computed max(ts) as the new watermark (a None
+    max — an empty or all-null batch — leaves it unchanged)."""
+    if max_ts is not None:
+        store.set(table, max_ts.isoformat(sep=" "))
+    return store.get(table)
+
+
 def advance_watermark(
     df: DataFrame, ts_col: str, store: WatermarkStore, table: str
 ) -> str | None:
     """Record max(ts) of the extracted batch as the new watermark."""
     row = df.agg(F.max(ts_col).alias("m")).collect()[0]
-    if row.m is not None:
-        store.set(table, row.m.isoformat(sep=" "))
-    return store.get(table)
+    return record_watermark(store, table, row.m)

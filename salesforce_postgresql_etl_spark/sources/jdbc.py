@@ -25,6 +25,13 @@ lowercase column names.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
+
+# Type given to string key columns in generated DDL. Spark's JDBC writer
+# otherwise emits CLOB on Derby, which Derby can neither compare (ERROR
+# 42818 in the MERGE join) nor index; PostgreSQL's TEXT would do, and
+# VARCHAR(255) is equally valid there.
+_STRING_KEY_TYPE = "VARCHAR(255)"
 
 
 def jdbc_available(spark) -> bool:
@@ -36,20 +43,93 @@ def jdbc_available(spark) -> bool:
         return False
 
 
-def write_full(df: DataFrame, url: str, table: str, props: dict) -> None:
-    """S4: full (re)load — DDL derived from df.schema."""
+def write_full(
+    df: DataFrame,
+    url: str,
+    table: str,
+    props: dict,
+    key_cols: list[str] | None = None,
+) -> None:
+    """S4: full (re)load — DDL derived from df.schema.
+
+    With ``key_cols`` the table is created keyed: string key columns
+    are declared ``VARCHAR(255)`` (unless ``createTableColumnTypes``
+    already types them) and a unique index on ``key_cols`` is added, so
+    an ANSI MERGE probes the index instead of scanning the table and
+    PostgreSQL's ``ON CONFLICT (key)`` has the unique index it requires.
+    """
     (
         df.write.format("jdbc")
         .option("url", url)
         .option("dbtable", table)
-        .options(**props)
+        .options(**(_with_string_keys(df, key_cols, props) if key_cols else props))
         .mode("overwrite")
         .save()
     )
+    if key_cols:
+        _execute(df.sparkSession, url, props, [_unique_index_sql(table, key_cols)])
 
 
 def _q(ident: str) -> str:
     return '"' + ident.replace('"', '""') + '"'
+
+
+def _with_string_keys(df: DataFrame, key_cols: list[str], props: dict) -> dict:
+    """``props`` with each string key column added to
+    ``createTableColumnTypes`` as ``VARCHAR(255)`` — merged into the
+    caller's value, never overriding a column it already types."""
+    opt = next(
+        (k for k in props if k.lower() == "createtablecolumntypes"),
+        "createTableColumnTypes",
+    )
+    given = props.get(opt, "").strip()
+    typed = (
+        {n.lower() for n in T.StructType.fromDDL(given).fieldNames()} if given else set()
+    )
+    strings = {f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)}
+    extra = [
+        "`" + c.replace("`", "``") + "` " + _STRING_KEY_TYPE
+        for c in key_cols
+        if c in strings and c.lower() not in typed
+    ]
+    if not extra:
+        return props
+    return {**props, opt: ", ".join([given, *extra] if given else extra)}
+
+
+def _unique_index_sql(table: str, key_cols: list[str]) -> str:
+    """Unique index on the key. The index name is derived from the
+    UNQUALIFIED table name: PostgreSQL rejects a schema-qualified index
+    name (the index always lives in its table's schema)."""
+    name = _validate_table(table).rsplit(".", 1)[-1] + "__key"
+    keys = ", ".join(_q(c) for c in key_cols)
+    return f"CREATE UNIQUE INDEX {name} ON {table} ({keys})"
+
+
+def _execute(spark, url: str, props: dict, statements: list[str], cleanup=()) -> None:
+    """Run ``statements`` in order on one JDBC connection (via the JVM
+    DriverManager), then every ``cleanup`` statement whatever happened.
+    A cleanup failure is ignored (e.g. dropping a table whose CREATE was
+    what failed), so the first real error is the one that propagates."""
+    jvm = spark._jvm
+    jprops = jvm.java.util.Properties()
+    for k, v in props.items():
+        jprops.setProperty(k, v)
+    conn = jvm.java.sql.DriverManager.getConnection(url, jprops)
+    try:
+        stmt = conn.createStatement()
+        try:
+            for sql in statements:
+                stmt.execute(sql)
+        finally:
+            for sql in cleanup:
+                try:
+                    stmt.execute(sql)
+                except Exception:
+                    pass
+            stmt.close()
+    finally:
+        conn.close()
 
 
 _TABLE_IDENT = __import__("re").compile(r"^[A-Za-z_][A-Za-z0-9_.]*$")
@@ -111,6 +191,9 @@ def upsert(
     """S5: staging table + one server-side merge (idempotent load).
 
     ``dialect``: ``postgresql`` → ON CONFLICT; ``ansi`` → MERGE INTO.
+    String key columns are staged as ``VARCHAR(255)`` unless
+    ``createTableColumnTypes`` types them (see ``write_full``). The
+    staging table is dropped whether or not the merge succeeds.
     """
     if dialect == "postgresql":
         merge_stmt = _upsert_sql
@@ -123,23 +206,16 @@ def upsert(
         df.write.format("jdbc")
         .option("url", url)
         .option("dbtable", staging)
-        .options(**props)
+        .options(**_with_string_keys(df, key_cols, props))
         .mode("overwrite")
         .save()
     )
-    # One server-side MERGE statement via the JVM DriverManager.
-    jvm = df.sparkSession._jvm
-    jprops = jvm.java.util.Properties()
-    for k, v in props.items():
-        jprops.setProperty(k, v)
-    conn = jvm.java.sql.DriverManager.getConnection(url, jprops)
-    try:
-        stmt = conn.createStatement()
-        stmt.execute(merge_stmt(table, staging, df.columns, key_cols))
-        stmt.execute(f"DROP TABLE {staging}")
-        stmt.close()
-    finally:
-        conn.close()
+    # One server-side MERGE statement; the staging table goes either way.
+    _execute(
+        df.sparkSession, url, props,
+        [merge_stmt(table, staging, df.columns, key_cols)],
+        cleanup=[f"DROP TABLE {staging}"],
+    )
 
 
 def read_partitioned(
@@ -273,39 +349,24 @@ def apply_cdc(
         f"SELECT {', '.join(_q(c) for c in payload_cols)} FROM {staging} "
         f"WHERE {ct} IN ('insert', 'update')"
     )
-    jvm = changes.sparkSession._jvm
-    jprops = jvm.java.util.Properties()
-    for k, v in props.items():
-        jprops.setProperty(k, v)
-    conn = jvm.java.sql.DriverManager.getConnection(url, jprops)
-    try:
-        stmt = conn.createStatement()
-        try:
-            stmt.execute(delete_stmt)
-            # stage the insert/update subset under a second name so the
-            # dialect merge templates (table FROM table) apply unchanged;
-            # Derby's CTAS only supports WITH NO DATA, so ansi populates
-            # with a separate INSERT
-            if dialect == "ansi":
-                stmt.execute(
-                    f"CREATE TABLE {staging}__iu AS {upsert_view} WITH NO DATA"
-                )
-                stmt.execute(f"INSERT INTO {staging}__iu {upsert_view}")
-            else:
-                stmt.execute(f"CREATE TABLE {staging}__iu AS {upsert_view}")
-            stmt.execute(
-                merge_stmt(table, f"{staging}__iu", payload_cols, key_cols)
-            )
-        finally:
-            # Always clear both staging tables (r6, advisor): a failure
-            # mid-sequence must not strand __iu — the next run's CREATE
-            # would fail outright. Absence is fine (e.g. the CREATE
-            # itself was what failed); real merge errors still propagate.
-            for t in (f"{staging}__iu", staging):
-                try:
-                    stmt.execute(f"DROP TABLE {t}")
-                except Exception:
-                    pass
-            stmt.close()
-    finally:
-        conn.close()
+    # stage the insert/update subset under a second name so the dialect
+    # merge templates (table FROM table) apply unchanged; Derby's CTAS
+    # only supports WITH NO DATA, so ansi populates with a separate INSERT
+    if dialect == "ansi":
+        stage_iu = [
+            f"CREATE TABLE {staging}__iu AS {upsert_view} WITH NO DATA",
+            f"INSERT INTO {staging}__iu {upsert_view}",
+        ]
+    else:
+        stage_iu = [f"CREATE TABLE {staging}__iu AS {upsert_view}"]
+    # Always clear both staging tables: a failure mid-sequence must not
+    # strand __iu — the next run's CREATE would fail outright.
+    _execute(
+        changes.sparkSession, url, props,
+        [
+            delete_stmt,
+            *stage_iu,
+            merge_stmt(table, f"{staging}__iu", payload_cols, key_cols),
+        ],
+        cleanup=[f"DROP TABLE {staging}__iu", f"DROP TABLE {staging}"],
+    )

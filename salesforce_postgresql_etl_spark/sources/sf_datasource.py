@@ -25,6 +25,14 @@ Scale shape (the part that matters at 100 TB):
 - the declared schema comes from the describe() field list through the
   same ``SF_TYPE_MAP`` lattice, so Catalyst plans against real types
   and never infers.
+- a ``ts > wm`` / ``ts >= wm`` bound on a top-level timestamp column
+  (the incremental extract's watermark predicate) is pushed into the
+  batch reader, which drops records at or below it before any field is
+  converted or crosses into Arrow — an incremental cycle materialises
+  only its delta. The filter is handed back to Spark as partially
+  pushed, so Spark still re-checks it above the scan. Python-source
+  pushdown needs ``spark.sql.python.filterPushdown.enabled`` (set by
+  ``session.configure_runtime``).
 
 In production the fetcher behind a partition would be an HTTP GET of
 one Bulk-API part file (CSV) or one REST queryMore page; here it is a
@@ -45,6 +53,9 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
+    Filter,
+    GreaterThan,
+    GreaterThanOrEqual,
     InputPartition,
 )
 
@@ -79,14 +90,47 @@ def _converter(dtype: T.DataType) -> Callable[[object], object]:
     return lambda v: v
 
 
+# A pushed lower bound: (column name, strict, bound) — keep a record iff
+# its value is > bound (strict) or >= bound. Values on both sides are
+# compared in the form _ts_key gives them.
+_Bound = tuple[str, bool, _dt.datetime]
+
+
+def _ts_key(dtype: T.DataType, value: _dt.datetime) -> _dt.datetime:
+    """The instant Spark will store for ``value``. A TimestampType value
+    becomes ``value.astimezone(UTC)`` on its way to Arrow — a naive
+    ``fromisoformat`` result is read as worker-local time, a pushed
+    bound arrives tz-aware — so both are compared as aware UTC.
+    TimestampNTZ values (and bounds) are naive wall times, compared
+    as they are."""
+    if isinstance(dtype, T.TimestampType):
+        return value.astimezone(_dt.timezone.utc)
+    return value
+
+
+def _above(raw: object, dtype: T.DataType, strict: bool, bound: _dt.datetime) -> bool:
+    if raw is None:
+        return False
+    v = _ts_key(dtype, _dt.datetime.fromisoformat(raw))
+    return v > bound if strict else v >= bound
+
+
 def _read_slice(
-    path: str, schema: T.StructType, start: int, end: int
+    path: str,
+    schema: T.StructType,
+    start: int,
+    end: int,
+    bounds: Sequence[_Bound] = (),
 ) -> Iterator[tuple]:
     """Executor-side: parse ONLY the [start, end) byte slice — shared
     by the batch and streaming readers so a record is typed identically
-    whichever transport delivered it."""
+    whichever transport delivered it. Records failing a pushed
+    ``bounds`` entry (or null in its column, as SQL ``>`` drops them)
+    are skipped before any field is converted."""
     convs = [_converter(f.dataType) for f in schema.fields]
     names = [f.name for f in schema.fields]
+    types = {f.name: f.dataType for f in schema.fields}
+    checks = [(n, strict, _ts_key(types[n], b)) for n, strict, b in bounds]
     with open(path, "rb") as f:
         f.seek(start)
         blob = f.read(end - start)
@@ -94,6 +138,10 @@ def _read_slice(
         if not raw.strip():
             continue
         rec = json.loads(raw)
+        if checks and not all(
+            _above(rec.get(n), types[n], strict, b) for n, strict, b in checks
+        ):
+            continue
         yield tuple(c(rec.get(n)) for n, c in zip(names, convs))
 
 
@@ -104,6 +152,29 @@ class SFModelReader(DataSourceReader):
         self.page_size = int(options.get("page_size", "2000"))
         if self.page_size <= 0:
             raise ValueError("page_size must be positive")
+        self.bounds: list[_Bound] = []
+
+    def pushFilters(self, filters: list[Filter]) -> list[Filter]:
+        """Keep every ``>`` / ``>=`` bound on a top-level timestamp
+        column for ``read`` — and return ALL filters: a kept bound is
+        only partially pushed, so Spark re-checks it above the scan and
+        a boundary slip here can never let an extra row through."""
+        ts_cols = {
+            f.name
+            for f in self.schema.fields
+            if isinstance(f.dataType, T.TimestampType | T.TimestampNTZType)
+        }
+        for flt in filters:
+            if (
+                isinstance(flt, GreaterThan | GreaterThanOrEqual)
+                and len(flt.attribute) == 1
+                and flt.attribute[0] in ts_cols
+                and isinstance(flt.value, _dt.datetime)
+            ):
+                self.bounds.append(
+                    (flt.attribute[0], isinstance(flt, GreaterThan), flt.value)
+                )
+        return filters
 
     def partitions(self) -> Sequence[InputPartition]:
         # Driver-side metadata-only pass: byte offsets of page starts.
@@ -128,7 +199,9 @@ class SFModelReader(DataSourceReader):
         ]
 
     def read(self, partition: _PagePartition) -> Iterator[tuple]:
-        return _read_slice(self.path, self.schema, partition.start, partition.end)
+        return _read_slice(
+            self.path, self.schema, partition.start, partition.end, self.bounds
+        )
 
 
 class SFModelStreamReader(DataSourceStreamReader):

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from salesforce_postgresql_etl_spark.pipeline import (
     latest_per_key,
     run_incremental_load,
@@ -143,3 +145,127 @@ def test_watermark_predicate_pushes_to_native_ts_scan(spark, tmp_path):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [IsNotNull(modstamp), GreaterThan(modstamp" in plan
     assert df.count() == 1
+
+
+# ---------------------------------------------------------------------
+# The provisioned target is keyed; string keys work with default props;
+# upsert never strands its staging table.
+
+SF_SCHEMA = "Id string, Name string, SystemModstamp timestamp"
+
+
+def _derby_rows(spark, sql: str) -> list[tuple]:
+    """Run a catalog query on the in-memory Derby warehouse; every
+    column comes back as its string form."""
+    jvm = spark._jvm
+    conn = jvm.java.sql.DriverManager.getConnection(URL)
+    try:
+        rs = conn.createStatement().executeQuery(sql)
+        n = rs.getMetaData().getColumnCount()
+        out = []
+        while rs.next():
+            out.append(tuple(str(rs.getObject(i)) for i in range(1, n + 1)))
+        return out
+    finally:
+        conn.close()
+
+
+def _indexes(spark, table: str) -> list[tuple]:
+    return _derby_rows(
+        spark,
+        "SELECT c.CONGLOMERATENAME, c.DESCRIPTOR FROM SYS.SYSCONGLOMERATES c "
+        "JOIN SYS.SYSTABLES t ON c.TABLEID = t.TABLEID "
+        f"WHERE t.TABLENAME = '{table.upper()}' AND c.ISINDEX",
+    )
+
+
+def _tables_ending(spark, suffix: str) -> list[str]:
+    return [
+        r[0]
+        for r in _derby_rows(spark, "SELECT TABLENAME FROM SYS.SYSTABLES")
+        if r[0].endswith(suffix)
+    ]
+
+
+def test_create_target_adds_unique_key_index(spark, tmp_path):
+    store = WatermarkStore(str(tmp_path / "wm.json"))
+    src = spark.createDataFrame(
+        [(7, "x", 1.0, _ts(1)), (8, "y", 2.0, _ts(2))], SCHEMA
+    )
+    run_incremental_load(
+        src, "modstamp", ["account_id"], store, "keyed_sync", URL, PROPS,
+        dialect="ansi", create_target=True,
+    )
+    idx = _indexes(spark, "keyed_sync")
+    # one unique B-tree index, on column 1 (account_id)
+    assert idx == [("KEYED_SYNC__KEY", "UNIQUE BTREE (1)")]
+
+
+def test_string_key_sync_with_default_props(spark, tmp_path):
+    """Spark types string columns CLOB on Derby, which can neither be
+    compared in the MERGE join nor indexed: a string key is declared
+    VARCHAR in the provisioned target and in the staging table."""
+    store = WatermarkStore(str(tmp_path / "wm.json"))
+    table = "sf_opportunity"
+    src1 = spark.createDataFrame(
+        [
+            ("006A", "a-v1", _ts(1)),
+            ("006A", "a-v2", _ts(3)),
+            ("006B", "b-v1", _ts(2)),
+        ],
+        SF_SCHEMA,
+    )
+    r1 = run_incremental_load(
+        src1, "SystemModstamp", ["Id"], store, table, URL, PROPS,
+        dialect="ansi", create_target=True,
+    )
+    assert (r1.rows_extracted, r1.rows_loaded) == (3, 2)
+    assert [d for _, d in _indexes(spark, table)] == ["UNIQUE BTREE (1)"]
+    src2 = spark.createDataFrame(
+        [("006B", "b-v2", _ts(4)), ("006C", "c-v1", _ts(5))], SF_SCHEMA
+    )
+    r2 = run_incremental_load(
+        src1.unionByName(src2), "SystemModstamp", ["Id"], store, table, URL, PROPS,
+        dialect="ansi",
+    )
+    assert (r2.rows_extracted, r2.rows_loaded) == (2, 2)
+    got = spark.read.format("jdbc").option("url", URL).option(
+        "dbtable", table
+    ).options(**PROPS).load()
+    assert sorted((r.Id, r.Name) for r in got.collect()) == [
+        ("006A", "a-v2"), ("006B", "b-v2"), ("006C", "c-v1"),
+    ]
+    assert _tables_ending(spark, "__STAGING") == []
+
+
+def test_string_key_upsert_after_keyed_write_full(spark):
+    """The library-level form of the same path, with a caller type for
+    a non-key column that must survive the merge of DDL types."""
+    from salesforce_postgresql_etl_spark.sources.jdbc import upsert, write_full
+
+    df = spark.createDataFrame(
+        [("001A", "alpha"), ("001B", "beta")], "Id string, Name string"
+    )
+    props = {**PROPS, "createTableColumnTypes": "Name VARCHAR(40)"}
+    write_full(df.limit(0), URL, "sf_account", props, key_cols=["Id"])
+    upsert(df, URL, "sf_account", ["Id"], PROPS, dialect="ansi")
+    upsert(df, URL, "sf_account", ["Id"], PROPS, dialect="ansi")  # idempotent
+    cols = _derby_rows(
+        spark,
+        "SELECT c.COLUMNNAME, c.COLUMNDATATYPE FROM SYS.SYSCOLUMNS c "
+        "JOIN SYS.SYSTABLES t ON c.REFERENCEID = t.TABLEID "
+        "WHERE t.TABLENAME = 'SF_ACCOUNT' ORDER BY c.COLUMNNUMBER",
+    )
+    assert cols == [("Id", "VARCHAR(255)"), ("Name", "VARCHAR(40)")]
+    assert _derby_rows(spark, 'SELECT COUNT(*) FROM sf_account') == [("2",)]
+
+
+def test_failed_merge_drops_staging_table(spark):
+    """A MERGE that fails (here: the target does not exist) still drops
+    <table>__staging, and the MERGE's own error is what propagates."""
+    from salesforce_postgresql_etl_spark.sources.jdbc import upsert
+
+    df = spark.createDataFrame([(1, "a")], "id bigint, name string")
+    with pytest.raises(Exception, match="NO_SUCH_TARGET"):
+        upsert(df, URL, "no_such_target", ["id"], PROPS, dialect="ansi")
+    assert _tables_ending(spark, "__STAGING") == []

@@ -165,3 +165,173 @@ def test_stream_torn_tail_line_deferred(spark, tmp_path):
     got = spark.read.parquet(sink)
     assert got.count() == 4
     assert got.where(f"Id = '{RECORDS[3]['Id']}'").count() == 1
+
+
+# ---------------------------------------------------------------------
+# Watermark pushdown: a `ts > wm` / `ts >= wm` bound reaches the reader,
+# which skips older (and null-stamped) records before converting them.
+
+TS_FIELDS = [
+    {"name": "Id", "type": "id", "nillable": False},
+    {"name": "Amount", "type": "currency"},
+    {"name": "SystemModstamp", "type": "datetime"},
+]
+
+TS_RECORDS = [
+    {
+        "Id": f"006{i:015d}",
+        "Amount": 10.0 * i,
+        # hour i of 2024-01-02, every fifth record null-stamped, one
+        # record with an explicit UTC offset (same instant as hour 7)
+        "SystemModstamp": None if i % 5 == 4
+        else "2024-01-02T09:00:00+02:00" if i == 7
+        else f"2024-01-02 {i:02d}:00:00.000",
+    }
+    for i in range(20)
+]
+
+
+@pytest.fixture(scope="module")
+def ts_jsonl(tmp_path_factory):
+    p = tmp_path_factory.mktemp("sfds_ts") / "opportunity_ts.jsonl"
+    p.write_text("\n".join(json.dumps(r) for r in TS_RECORDS) + "\n")
+    return str(p)
+
+
+def _ts_reader(spark, path):
+    spark.dataSource.register(SalesforceModelDataSource)
+    return (
+        spark.read.format("sf_model")
+        .option("describe", json.dumps(TS_FIELDS))
+        .option("path", path)
+        .option("page_size", "6")
+        .load()
+    )
+
+
+def _unpushed(spark, df):
+    """The same rows as a local relation: a filter over it cannot reach
+    the sf_model reader."""
+    return spark.createDataFrame(df.collect(), df.schema)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _scan_rows(df) -> int:
+    """Rows the sf_model scan emitted in ``df``'s last execution."""
+    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
+    scans = [leaves.apply(i) for i in range(leaves.size())]
+    return sum(
+        n.metrics().apply("numOutputRows").value()
+        for n in scans
+        if n.nodeName() == "BatchScan sf_model"
+    )
+
+
+@pytest.mark.parametrize("op", [">", ">="])
+@pytest.mark.parametrize(
+    "wm",
+    [
+        "2024-01-02 07:00:00",  # equals the +02:00 record's instant
+        "2024-01-02 06:30:00",  # between two stamps
+        "2024-01-02 00:00:00",  # equals the first stamp
+        "2024-01-03 00:00:00",  # above every stamp
+    ],
+)
+def test_pushed_bound_matches_unpushed(spark, ts_jsonl, op, wm):
+    """Null-stamped records are in the input too: SQL drops them, so a
+    reader that emitted them would fail the scan-row check."""
+    from pyspark.sql import functions as F
+
+    src = _ts_reader(spark, ts_jsonl)
+    cut = F.lit(wm).cast("timestamp_ntz")
+    col = F.col("SystemModstamp")
+    pred = (col > cut) if op == ">" else (col >= cut)
+    want = _rows(_unpushed(spark, src).where(pred))
+    pushed = src.where(pred)
+    assert _rows(pushed) == want
+    # the bound reached the reader: it emitted only the matching rows
+    assert _scan_rows(pushed) == len(want)
+    # the boundary record is in the result exactly when the bound is >=
+    if wm == "2024-01-02 07:00:00":
+        at = {r[0] for r in want} & {"006000000000000007"}
+        assert bool(at) == (op == ">=")
+
+
+@pytest.mark.parametrize("lag", [0, 5400])
+def test_incremental_extract_pushed_matches_unpushed(spark, ts_jsonl, tmp_path, lag):
+    from salesforce_postgresql_etl_spark.sources.incremental import (
+        WatermarkStore,
+        incremental_extract,
+    )
+
+    store = WatermarkStore(str(tmp_path / "wm.json"))
+    store.set("opp", "2024-01-02 10:00:00")
+    src = _ts_reader(spark, ts_jsonl)
+    got = _rows(incremental_extract(src, "SystemModstamp", store, "opp", lag_seconds=lag))
+    want = _rows(
+        incremental_extract(
+            _unpushed(spark, src), "SystemModstamp", store, "opp", lag_seconds=lag
+        )
+    )
+    assert got == want
+    # lag 5400 s re-reads the 08:30–10:00 window: hour 10 (9 is null)
+    assert len(got) == len(want) == (7 if lag == 0 else 8)
+
+
+def test_push_filters_keeps_only_timestamp_bounds(ts_jsonl):
+    from pyspark.sql import types as T
+    from pyspark.sql.datasource import EqualTo, GreaterThan, GreaterThanOrEqual, IsNotNull
+
+    from salesforce_postgresql_etl_spark.sources.salesforce import schema_from_describe
+    from salesforce_postgresql_etl_spark.sources.sf_datasource import SFModelReader
+
+    schema = schema_from_describe(TS_FIELDS)
+    assert isinstance(schema["SystemModstamp"].dataType, T.TimestampType)
+    reader = SFModelReader(schema, {"path": ts_jsonl})
+    bound = dt.datetime(2024, 1, 2, 7, tzinfo=dt.timezone.utc)
+    filters = [
+        IsNotNull(("SystemModstamp",)),
+        GreaterThan(("SystemModstamp",), bound),
+        GreaterThan(("Amount",), decimal.Decimal("5")),
+        EqualTo(("Id",), "006000000000000001"),
+        GreaterThanOrEqual(("SystemModstamp",), bound),
+    ]
+    returned = list(reader.pushFilters(filters))
+    # every filter goes back to Spark (the bounds as partially pushed)
+    assert len(returned) == len(filters)
+    assert all(a is b for a, b in zip(returned, filters))
+    assert reader.bounds == [
+        ("SystemModstamp", True, bound),
+        ("SystemModstamp", False, bound),
+    ]
+    # and read() applies them: only records strictly after 07:00 UTC
+    rows = [r for p in reader.partitions() for r in reader.read(p)]
+    assert sorted(r[0] for r in rows) == sorted(
+        r["Id"]
+        for r in TS_RECORDS
+        if r["SystemModstamp"] is not None
+        and int(r["Id"][-2:]) > 7
+    )
+
+
+def test_configure_runtime_enables_sf_model_reads(spark, ts_jsonl):
+    """A session that get_spark did not configure (here: the shared one
+    with the pushdown conf switched off, as a driver-owned session may
+    arrive) cannot read the source until configure_runtime runs on it."""
+    from salesforce_postgresql_etl_spark.session import configure_runtime
+
+    conf = "spark.sql.python.filterPushdown.enabled"
+    bound = "SystemModstamp > TIMESTAMP_NTZ'2024-01-02 10:00:00'"
+    want = _rows(_unpushed(spark, _ts_reader(spark, ts_jsonl)).where(bound))
+    spark.conf.set(conf, "false")
+    try:
+        with pytest.raises(Exception, match="DATA_SOURCE_PUSHDOWN_DISABLED"):
+            _ts_reader(spark, ts_jsonl).collect()
+        configure_runtime(spark)
+        assert spark.conf.get(conf) == "true"
+        assert _rows(_ts_reader(spark, ts_jsonl).where(bound)) == want
+    finally:
+        spark.conf.set(conf, "true")
