@@ -40,8 +40,6 @@ Scale shape (100 TB story):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -69,11 +67,8 @@ _LOOP_ROWS_PER_PARTITION = 100_000
 # built hash relation) — comfortably inside executor memory anywhere.
 # At 100 TB the first round's billions of edges keep the gate shut and
 # the joins stay sort-merge; contracted later rounds flip to broadcast
-# exactly when their data justifies it. Env-overridable for clusters
-# with tighter executors.
-_CC_BROADCAST_ROWS = int(
-    os.environ.get("SPARK_GRAFT_CC_BROADCAST_ROWS", "1000000")
-)
+# exactly when their data justifies it.
+_CC_BROADCAST_ROWS = 1_000_000
 
 # r13 OPT (guide §2.6 fixed job overhead): pointer hops composed per
 # checkpointed compression pass in the broadcast regime. Each pass is
@@ -83,8 +78,8 @@ _CC_BROADCAST_ROWS = int(
 # reach ×2, a hop-chain pass reaches ×(hops+1). Reach across passes is
 # (hops+1)^passes vs 2^passes. 7 hops → chains ≤ 8 compress in ONE
 # 2-job pass (the measured LSH graph needed FOUR squaring passes = 8
-# jobs), ≤ 64 in two. Env-overridable for plan-size-sensitive setups.
-_CC_JUMP_HOPS = int(os.environ.get("SPARK_GRAFT_CC_JUMP_HOPS", "7"))
+# jobs), ≤ 64 in two.
+_CC_JUMP_HOPS = 7
 
 # r14 OPT (guide §4.2 "do the heavy lifting in native code", §2.6 job
 # overhead): once the MEASURED edge count clears this gate the whole
@@ -95,11 +90,9 @@ _CC_JUMP_HOPS = int(os.environ.get("SPARK_GRAFT_CC_JUMP_HOPS", "7"))
 # milliseconds. The default reuses the broadcast gate's bound (≤ 1M
 # edge rows ≈ 16 MB — trivially one-task-sized); at 100 TB the first
 # billions-of-edges rounds keep the distributed loop and the finish
-# only ever sees the contracted remnant. Env-overridable; tests pin
-# the loop path by zeroing it.
-_CC_LOCAL_FINISH_ROWS = int(
-    os.environ.get("SPARK_GRAFT_CC_LOCAL_ROWS", str(_CC_BROADCAST_ROWS))
-)
+# only ever sees the contracted remnant. Tests pin the loop path by
+# zeroing it.
+_CC_LOCAL_FINISH_ROWS = _CC_BROADCAST_ROWS
 
 
 def _maybe_broadcast(df: DataFrame, bound_rows: int) -> DataFrame:

@@ -139,7 +139,7 @@ def _minhash_band_rows(tok: DataFrame, n_hashes: int, bands: int) -> DataFrame:
     shuffle, while the crossing ships EVERY token hash through the
     Python boundary behind an interpreted ``transform`` lambda (the
     guide §8 "move heavy bytes once" lesson, in reverse). This JVM
-    shape is the right one; see OPTIMIZATION_r13.md.
+    shape is the right one.
     """
     r = n_hashes // bands
     exploded = tok.select("doc_id", F.explode("t").alias("tok"))
@@ -675,7 +675,7 @@ def hamming_pairs(
     (doc_id, sig) table before the self-join. Both strategies
     reference the signature lineage TWICE (the a/b sides), and
     exchange reuse canNOT be relied on to deduplicate the upstream
-    work: measured on the media operators (tests/perceptual_audit.py),
+    work: measured on the media operators' final plans,
     AQE picks a broadcast hash join for the banded equi-join, whose
     build side has no shuffle exchange at all — the final plan showed
     TWO decode (MapInPandas) nodes and zero ReusedExchange, i.e. every

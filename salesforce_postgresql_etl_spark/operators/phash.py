@@ -174,7 +174,7 @@ def phash_neardup(
     ``persist`` (default True) checkpoints the 16-byte (id, hash)
     table before the self-join so every payload decodes exactly ONCE —
     without it the join's two sides each run the decode lineage
-    (measured, tests/perceptual_audit.py: two MapInPandas nodes, zero
+    (measured on the lazy form's final plan: two MapInPandas nodes, zero
     ReusedExchange — at 100 TB that is a second full decode pass of
     the corpus)."""
     from .dedup import hamming_pairs

@@ -886,7 +886,7 @@ def semdedup_pairs(
 
     ``k=None`` (the default) derives k from the corpus: ``max(8,
     isqrt(n))`` — the paper's k ≈ √n-or-larger regime. The r9 scale
-    curve (SCALE.md, tests/semdedup_scale_curve.py) measured what the
+    curve (SCALE.md) measured what the
     geometry predicts: at FIXED k the within-bucket candidate volume
     Σ n_b(n_b−1)/2 grows superlinearly (2× data cost 2.33×, 4× cost
     3.81×), while k ∝ n holds bucket sizes and restores near-linear

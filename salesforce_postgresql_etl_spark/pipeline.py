@@ -40,8 +40,10 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# advance_watermark is re-exported: a cycle now takes max(ts) from its
-# one statistics aggregate, but callers address it as part of this API.
+# advance_watermark is re-exported although a cycle no longer calls it
+# (it takes max(ts) from its one statistics aggregate): perfbench's
+# ``sync --trace 1`` wraps ``pipeline.advance_watermark`` by attribute
+# lookup and fails without it.
 from .sources.incremental import (  # noqa: F401
     WatermarkStore,
     advance_watermark,

@@ -4,6 +4,9 @@ Every operator family module registers its queries here with
 ``@register(name, oracle=...)``. ``__spark_entry__.py`` exposes the
 registry to the driver. Registration discipline (SURVEY.md §2): a name
 is only registered once its DuckDB differential passes locally.
+
+``registry()`` (and so ``__spark_entry__.queries()``) returns the names
+in one fixed order: ``_FRONT``, then the rest in registration order.
 """
 
 from __future__ import annotations
@@ -27,197 +30,10 @@ class Query:
 
 _REGISTRY: dict[str, Query] = {}
 
-# Registration order IS the driver's grading order: the t2 harness checks
-# the first N registered queries (N=27 in r1, 50 in r2+). Round-5
-# rotation (VERDICT r4 #1): the 4 never-graded r4 additions (sampling_q,
-# corpus_q) and the 35 r3-stale families (relational, aggregates) move
-# to the FRONT so every registered query's newest green is ≤1 round old
-# after this round. The tail of the window anchors with llm_ext + the
-# first llm queries — exactly the families touched by this round's
-# dedup/simsearch changes (char-shingle MinHash tokenizer, cosine
-# prefilter margin), so those edits are driver-re-proven, not just
-# pytest-proven. sampling_q 1-2, corpus_q 3-4, relational 5-31,
-# aggregates 32-39, llm_ext 40-47 (incl. the new q_neardup_ngram_lsh),
-# llm 48-50 (q_dedup_hash, q_neardup_jaccard, q_simsearch_topk).
-# windows/scalars/stream_equiv/udfs/sources_q + llm tail rotate out —
-# all driver-green in r04 (COVERAGE.md ledger has per-query rounds).
-_MODULES = (
-    "sampling_q",
-    "corpus_q",
-    "relational",
-    "aggregates",
-    "llm_ext",
-    "llm",
-    "windows",
-    "scalars",
-    "stream_equiv",
-    "udfs",
-    "sources_q",
-    "extras_q",  # r5 additions — LAST so the graded window is unchanged
-    "textprep_q",  # r5 additions (repetition/chunking/mixture) — tail
-    "cdc_q",  # r5d additions (snapshot-diff CDC) — tail
-    "analytics_q",  # r5d additions (funnel/cohort/TWA) — tail
-    "ir_q",  # r5d additions (inverted index, BM25) — tail
-    "media_q",  # r8 additions (r7 media/streaming surface) — fronted
-    # explicitly by _R8_FRONT; module order is irrelevant for them
-)
-# r6 rotation (VERDICT r5 #1), executed: module order alone cannot
-# front mid-module queries (q_stream_join lives among r4-graded udfs
-# siblings, q_join_bucketed/q_orc_roundtrip in sources_q), so the
-# window is now an EXPLICIT per-query order: _R6_FRONT pins slots
-# 1–50 — the 41 never-driver-graded r5 additions first (extras_q 10,
-# textprep_q 3, cdc_q 4, analytics_q 13, ir_q 7, plus the 4
-# mid-module ones), anchored by the stalest r4-green family
-# (windows, 9 incl. q_join_asof). Everything after slot 50 keeps
-# module registration order. After a green r6 run every registered
-# query is driver-proven; max staleness is 2 rounds
-# (scalars/stream_equiv/udfs/sources_q + llm tail — front those in
-# r7 with relational/aggregates/sampling/corpus behind them).
-# r7 rotation (VERDICT r6 #1), executed: the window is the 31 queries
-# whose newest green is r4 (computed from CORRECTNESS_r01–r06, not
-# COVERAGE.md: scalars 11, stream_equiv 5, udfs 5, sources_q 5, llm
-# tail 5) fronted first, then the flagship q_agg_group (in-window
-# every round per the flagship rule), then the stalest r5-green
-# families — sampling_q 4, corpus_q 4, llm_ext head 4, llm head 3,
-# relational head 3 — to fill slots 33–50. The 34 remaining r5-green
-# relational/aggregates queries become 2 rounds stale after r7 (the
-# accepted floor at 131 queries / 50 slots) and front in r8. After a
-# green r7 run, max staleness across all 131 is again ≤2 rounds.
-# r8 rotation DRAFT (execute at the start of r8, after the r7
-# CORRECTNESS run lands): front the 31 queries whose newest green
-# will then be r5 — the relational bulk (q_filter_in q_filter_like
-# q_filter_between q_filter_null q_join_star q_join_left q_join_full
-# q_join_semi q_join_anti q_join_range q_join_cross q_join_self
-# q_agg_global q_agg_countdistinct q_agg_approx_cd q_agg_having
-# q_sort q_topk q_limit_offset q_union_all q_union_distinct
-# q_intersect q_except, 23) and aggregates (q_agg_groupingsets
-# q_agg_rollup q_agg_cube q_pivot q_agg_stats q_agg_median
-# q_agg_arrays q_agg_maxby, 8); keep q_agg_group in-window per the
-# flagship rule (32 slots); fill the remaining 18 with the stalest
-# r6-green families (extras_q head: q_neardup_clusters q_salted_agg
-# q_rollup_cascade q_reconcile q_dq_report q_scd2_merge
-# q_validate_rules q_salted_join q_quantile_sketch q_unpivot;
-# textprep_q: q_repetition_filter q_chunk_docs q_domain_mix; cdc_q:
-# q_snapshot_diff q_sfid18 q_incremental_agg q_entity_match; +1
-# analytics_q head). After a green r8, max staleness is again ≤2.
-# r8 rotation (VERDICT r7 #1) — EXECUTED below as _R8_FRONT; verified
-# at rotation time that the 31 fronted r5-green names exactly equal the
-# set computed from CORRECTNESS_r01–r07 (latest-green == r5), per the
-# mechanical-ledger discipline (VERDICT r7 #6). Slots: relational 23 +
-# aggregates 8 + flagship q_agg_group (32 required), then fills. The
-# fill set DEVIATES from the draft deliberately, to satisfy VERDICT r7
-# #2's stronger done-criterion ("each new registration with a green r8
-# CORRECTNESS row"): 6 of the 18 drafted r6-green fills (q_chunk_docs,
-# q_domain_mix, q_snapshot_diff, q_sfid18, q_incremental_agg,
-# q_funnel) yield their slots to the 6 NEW media/streaming
-# registrations (media_q — each passed the local differential 3/3
-# before registration). The 6 displaced queries stay r6-green → 2
-# rounds stale after r8 (the accepted floor), and front in r9 with the
-# other 44 r6-greens: 50 exactly, so max staleness stays ≤2 through
-# the widened registry (137 ≤ 150, re-proof cycle still 3 rounds).
-# Kept fills: extras_q head 10 + q_repetition_filter + q_entity_match
-# (in-window insurance for the r8 ER skew-cap work, oracle unchanged).
-# r9 rotation (VERDICT r8 #1) — EXECUTED below as _R9_FRONT; the
-# fronted sets were recomputed with tests/coverage_ledger.py at
-# rotation time (not taken from the draft prose) and matched it
-# exactly: 10 never-green late-r8 registrations + 38 queries whose
-# newest green is r6 (extras_q/cdc_q/analytics_q/ir_q bulk + windows
-# + the mid-module four) + flagship q_agg_group + 1 fill
-# (q_hash_split, the stalest r7-green in registration order) = 50.
-# After a green r9: never-green = the 2 late-r9 registrations
-# (q_semdedup, q_token_budget), max staleness ≤2 across the 147
-# pre-r9 names. Registry cap decision (VERDICT r8 #5): hold at 149
-# (≤150); exact arithmetic in COVERAGE.md — the true ≤2-staleness
-# capacity is 148 (3×50 minus the flagship's three slots), so ONE
-# rotating query sits at staleness 3 in steady state, accepted and
-# declared. r10 draft: front q_semdedup + q_token_budget, then 47 of
-# the 48 r7-greens in registration order (recompute with
-# tests/coverage_ledger.py), keep flagship q_agg_group in-window =
-# 50; the 1 deferred r7-green fronts FIRST in r11.
-# r10 rotation (VERDICT r9 #1) — EXECUTED below as _R10_FRONT; the
-# fronted sets were recomputed with tests/coverage_ledger.py at
-# rotation time, not taken from the draft prose, and matched it
-# exactly: the 2 never-green late-r9 registrations (q_semdedup,
-# q_token_budget) first, then 47 of the 48 r7-greens in registration
-# order (the ledger's per-query list filtered to latest==r7), then
-# flagship q_agg_group = 50. The deferred 48th r7-green is
-# q_incremental_extract (LAST of the 48 in registration order) — it
-# is the registry-cap policy's single declared staleness-3 query and
-# fronts FIRST in r11 (r11 draft: q_incremental_extract + the 49
-# r8-greens minus flagship slots, recompute with the ledger). After
-# a green r10: never-green = 0 for the first time since r7, max
-# staleness 3 on exactly one query (q_incremental_extract), ≤2 on
-# the other 148.
-# r11 rotation (VERDICT r10 #1) — EXECUTED below as _R11_FRONT; the
-# fronted sets were recomputed with tests/coverage_ledger.py at
-# rotation time, not taken from the draft prose. The arithmetic the
-# r10 verdict demanded be resolved explicitly: candidates are
-# q_incremental_extract (the declared staleness-3 query, fronts
-# FIRST) + 49 r8-greens + flagship q_agg_group = 51 for 50 slots, so
-# exactly ONE r8-green is deferred to staleness 3 in its place —
-# q_compact_corpus, the LAST of the 49 in registration order (same
-# tie-break the r10 rotation used when it deferred
-# q_incremental_extract). q_compact_corpus stays pytest-covered in
-# the interim by tests/test_compact_corpus.py and the randomized
-# crash-injection sweep, and fronts FIRST in r12 (r12 draft:
-# q_compact_corpus + the 49 r9-greens minus flagship slots, recompute
-# with the ledger). After a green r11: max staleness 3 on exactly one
-# query (q_compact_corpus), ≤2 on the other 148, never-green empty.
-# r12 rotation (r11 draft, executed) — EXECUTED below as _R12_FRONT;
-# the fronted sets were recomputed with tests/coverage_ledger.py at
-# rotation time, not taken from the draft prose. CORRECTNESS_r11 came
-# back 50/50 green (window == _R11_FRONT exactly), so the ledger reads
-# {r8: 1, r9: 49, r10: 49, r11: 50}. Candidates: q_compact_corpus (the
-# declared staleness-3 query, fronts FIRST) + 49 r9-greens + flagship
-# q_agg_group = 51 for 50 slots, so exactly ONE r9-green is deferred
-# to staleness 3 in its place — q_reclose_chain, the LAST of the 49 in
-# registration order (the same tie-break r10 and r11 used).
-# q_reclose_chain stays pytest-covered in the interim by
-# tests/test_reclose_random.py and the randomized crash-injection
-# sweep (tests/test_maintenance_crash_random.py), and
-# fronts FIRST in r13 (r13 draft: q_reclose_chain + the 49 r10-greens
-# minus flagship slots, recompute with the ledger). After a green r12:
-# max staleness 3 on exactly one query (q_reclose_chain), ≤2 on the
-# other 148, never-green empty.
-# r13 rotation (r12 draft + VERDICT r12 #1, executed) — EXECUTED below
-# as _R13_FRONT; the fronted set is EXACTLY the mechanized ledger's
-# draft (tests/coverage_ledger.py next_rotation_draft, pinned by
-# tests/test_rotation_draft.py), not hand-recomputed prose.
-# CORRECTNESS_r12 came back 50/50 green (window == _R12_FRONT exactly),
-# so the ledger reads {r9: 1, r10: 49, r11: 49, r12: 50}. Candidates:
-# q_reclose_chain (the declared staleness-3 query, fronts FIRST) + 49
-# r10-greens + flagship q_agg_group = 51 for 50 slots, so exactly ONE
-# r10-green is deferred to staleness 3 in its place —
-# q_parquet_roundtrip, the LAST of the 49 in registration order (the
-# same tie-break r10/r11/r12 used). q_parquet_roundtrip stays
-# pytest-covered in the interim by tests/test_sources.py (partitioned
-# write→read + static partition-pruning plan assertion) and fronts
-# FIRST in r14 (r14 draft: q_parquet_roundtrip + the 49 r11-greens
-# minus flagship slots, recompute with the ledger). After a green r13:
-# max staleness 3 on exactly one query (q_parquet_roundtrip), ≤2 on
-# the other 148, never-green empty.
-# r14 rotation (r13 draft + VERDICT r13 #3, executed) — EXECUTED below
-# as _R14_FRONT; the fronted set is EXACTLY the mechanized ledger's
-# draft (tests/coverage_ledger.py next_rotation_draft, pinned by
-# tests/test_rotation_draft.py), not hand-recomputed prose.
-# CORRECTNESS_r13 came back 50/50 green (window == _R13_FRONT exactly),
-# so the ledger reads {r10: 1, r11: 49, r12: 49, r13: 50}. Candidates:
-# q_parquet_roundtrip (the declared staleness-3 query, fronts FIRST) +
-# 49 r11-greens + flagship q_agg_group = 51 for 50 slots, so exactly
-# ONE r11-green is deferred to staleness 3 in its place —
-# q_neardup_stream_equiv, the LAST of the 49 in registration order
-# (the same tie-break r10/r11/r12/r13 used). q_neardup_stream_equiv
-# stays pytest-covered in the interim by tests/test_streaming.py (the
-# clique-drain batch≡stream equivalence suite) and fronts FIRST in r15
-# (r15 draft: q_neardup_stream_equiv + the 49 r12-greens minus
-# flagship slots, recompute with the ledger). This window also carries
-# the post-r13-engine-change gradings VERDICT r13 "what's wrong" #3
-# demanded: q_entity_match, q_join_star, q_neardup_clusters,
-# q_repetition_filter are all in-window (they are r11-greens, so the
-# mechanized draft fronts them without exception). After a green r14:
-# max staleness 3 on exactly one query (q_neardup_stream_equiv), ≤2 on
-# the other 148, never-green empty.
-_R14_FRONT = (
+# The query order is kept fixed because nobody has confirmed that no
+# external caller reads ``__spark_entry__.queries()`` in this order;
+# tests/test_output_contract.py pins it.
+_FRONT = (
     # the declared staleness-3 query — fronts FIRST per r13 policy note
     "q_parquet_roundtrip",
     # 48 of the 49 r11-greens, registration order (ledger-computed);
@@ -273,488 +89,25 @@ _R14_FRONT = (
     # flagship — always in-window
     "q_agg_group",
 )
-# r13 rotation — executed, 50/50 green in CORRECTNESS_r13 (window ==
-# this tuple exactly, judge-verified). Kept for the ledger.
-# Superseded by _R14_FRONT above.
-_R13_FRONT = (
-    # the declared staleness-3 query — fronts FIRST per r12 policy note
-    "q_reclose_chain",
-    # 48 of the 49 r10-greens, registration order (ledger-computed);
-    # q_parquet_roundtrip (the 49th) deferred to front FIRST in r14
-    "q_stratified_sample",
-    "q_pack_sequences",
-    "q_token_budget",
-    "q_decontaminate",
-    "q_project",
-    "q_filter_pred",
-    "q_join_inner",
-    "q_dedup_simhash",
-    "q_neardup_ngram",
-    "q_neardup_ngram_lsh",
-    "q_neardup_embed",
-    "q_semdedup",
-    "q_lang_id",
-    "q_quality_score",
-    "q_multimodal_features",
-    "q_fingerprint",
-    "q_dedup_hash",
-    "q_neardup_jaccard",
-    "q_simsearch_topk",
-    "q_text_stats",
-    "q_token_count",
-    "q_ngrams",
-    "q_tfidf",
-    "q_embed_centroid",
-    "q_str_funcs",
-    "q_str_regex",
-    "q_date_funcs",
-    "q_math_funcs",
-    "q_cond_funcs",
-    "q_casts",
-    "q_json_extract",
-    "q_array_funcs",
-    "q_array_lambda",
-    "q_map_funcs",
-    "q_hash",
-    "q_stream_tumbling",
-    "q_stream_sliding",
-    "q_sessionize",
-    "q_dedup_exact",
-    "q_state_running",
-    "q_udf_scalar",
-    "q_pandas_udf",
-    "q_pandas_agg",
-    "q_applyinpandas_normalize",
-    "q_explode",
-    "q_scan_project",
-    "q_csv_roundtrip",
-    "q_json_roundtrip",
-    # flagship — always in-window
-    "q_agg_group",
-)
-# r12 rotation (r11 draft, executed) — executed, 50/50 green in
-# CORRECTNESS_r12 (window == this tuple exactly, judge-verified).
-# Kept for the ledger. Superseded by _R13_FRONT above.
-_R12_FRONT = (
-    # the declared staleness-3 query — fronts FIRST per r11 policy note
-    "q_compact_corpus",
-    # 48 of the 49 r9-greens, registration order (ledger-computed);
-    # q_reclose_chain (the 49th) deferred to front FIRST in r13
-    "q_hash_split",
-    "q_neardup_embed_lsh",
-    "q_neardup_minhash",
-    "q_win_dedup_latest",
-    "q_win_rank",
-    "q_win_ntile",
-    "q_win_lag",
-    "q_win_running",
-    "q_win_range",
-    "q_win_firstlast",
-    "q_win_topk_group",
-    "q_join_asof",
-    "q_stream_join",
-    "q_udtf_rle",
-    "q_join_bucketed",
-    "q_orc_roundtrip",
-    "q_heavy_hitters",
-    "q_chunk_docs",
-    "q_domain_mix",
-    "q_dup_spans",
-    "q_strip_dup_spans",
-    "q_snapshot_diff",
-    "q_sfid18",
-    "q_incremental_agg",
-    "q_funnel",
-    "q_cohort_retention",
-    "q_twa",
-    "q_attribution",
-    "q_mad_outliers",
-    "q_gap_fill",
-    "q_asof_forward",
-    "q_triangles",
-    "q_funnel_horizon",
-    "q_dedup_keep_best",
-    "q_trend",
-    "q_pareto",
-    "q_rolling_distinct",
-    "q_inverted_index",
-    "q_bm25",
-    "q_pii_scrub",
-    "q_unigram_logprob",
-    "q_weighted_sample",
-    "q_pmi",
-    "q_neardup_incremental",
-    "q_simsearch_ivf",
-    "q_simsearch_pq",
-    "q_audio_embed",
-    "q_video_embed",
-    # flagship — always in-window
-    "q_agg_group",
-)
-# r11 rotation (VERDICT r10 #1) — executed, 50/50 green in
-# CORRECTNESS_r11 (window == this tuple exactly). Kept for the ledger.
-# Superseded by _R12_FRONT above.
-_R11_FRONT = (
-    # the declared staleness-3 query — fronts FIRST per VERDICT r10 #1
-    "q_incremental_extract",
-    # 48 of the 49 r8-greens, registration order (ledger-computed);
-    # q_compact_corpus (the 49th) deferred to front FIRST in r12
-    "q_filter_in",
-    "q_filter_like",
-    "q_filter_between",
-    "q_filter_null",
-    "q_join_star",
-    "q_join_left",
-    "q_join_full",
-    "q_join_semi",
-    "q_join_anti",
-    "q_join_range",
-    "q_join_cross",
-    "q_join_self",
-    "q_agg_global",
-    "q_agg_countdistinct",
-    "q_agg_approx_cd",
-    "q_agg_having",
-    "q_sort",
-    "q_topk",
-    "q_limit_offset",
-    "q_union_all",
-    "q_union_distinct",
-    "q_intersect",
-    "q_except",
-    "q_agg_groupingsets",
-    "q_agg_rollup",
-    "q_agg_cube",
-    "q_pivot",
-    "q_agg_stats",
-    "q_agg_median",
-    "q_agg_arrays",
-    "q_agg_maxby",
-    "q_neardup_clusters",
-    "q_salted_agg",
-    "q_rollup_cascade",
-    "q_reconcile",
-    "q_dq_report",
-    "q_scd2_merge",
-    "q_validate_rules",
-    "q_salted_join",
-    "q_quantile_sketch",
-    "q_unpivot",
-    "q_repetition_filter",
-    "q_entity_match",
-    "q_phash_neardup",
-    "q_audiofp_neardup",
-    "q_video_neardup",
-    "q_media_embed",
-    "q_neardup_stream_equiv",
-    # flagship — always in-window
-    "q_agg_group",
-)
-# r10 rotation (VERDICT r9 #1) — executed, 50/50 green in
-# CORRECTNESS_r10 (window == this tuple exactly, judge-verified).
-# Kept for the ledger. Superseded by _R11_FRONT above.
-_R10_FRONT = (
-    # never driver-graded (registered past the frozen r9 window)
-    "q_semdedup",
-    "q_token_budget",
-    # 47 of the 48 r7-greens, registration order (ledger-computed);
-    # q_incremental_extract deferred to front FIRST in r11
-    "q_stratified_sample",
-    "q_pack_sequences",
-    "q_decontaminate",
-    "q_project",
-    "q_filter_pred",
-    "q_join_inner",
-    "q_dedup_simhash",
-    "q_neardup_ngram",
-    "q_neardup_ngram_lsh",
-    "q_neardup_embed",
-    "q_lang_id",
-    "q_quality_score",
-    "q_multimodal_features",
-    "q_fingerprint",
-    "q_dedup_hash",
-    "q_neardup_jaccard",
-    "q_simsearch_topk",
-    "q_text_stats",
-    "q_token_count",
-    "q_ngrams",
-    "q_tfidf",
-    "q_embed_centroid",
-    "q_str_funcs",
-    "q_str_regex",
-    "q_date_funcs",
-    "q_math_funcs",
-    "q_cond_funcs",
-    "q_casts",
-    "q_json_extract",
-    "q_array_funcs",
-    "q_array_lambda",
-    "q_map_funcs",
-    "q_hash",
-    "q_stream_tumbling",
-    "q_stream_sliding",
-    "q_sessionize",
-    "q_dedup_exact",
-    "q_state_running",
-    "q_udf_scalar",
-    "q_pandas_udf",
-    "q_pandas_agg",
-    "q_applyinpandas_normalize",
-    "q_explode",
-    "q_scan_project",
-    "q_csv_roundtrip",
-    "q_json_roundtrip",
-    "q_parquet_roundtrip",
-    # flagship — always in-window
-    "q_agg_group",
-)
-# r9 rotation (VERDICT r8 #1) — executed, 50/50 green in
-# CORRECTNESS_r09 (window == this tuple exactly, judge-verified).
-# Kept for the ledger. Superseded by _R10_FRONT above.
-_R9_FRONT = (
-    # never driver-graded (registered past the frozen r8 window)
-    "q_reclose_chain",
-    "q_audio_embed",
-    "q_video_embed",
-    "q_dup_spans",
-    "q_strip_dup_spans",
-    "q_heavy_hitters",
-    "q_neardup_embed_lsh",
-    "q_neardup_minhash",
-    "q_simsearch_ivf",
-    "q_simsearch_pq",
-    # newest green r6 — extras_q/textprep/cdc_q stale remainder
-    "q_chunk_docs",
-    "q_domain_mix",
-    "q_snapshot_diff",
-    "q_sfid18",
-    "q_incremental_agg",
-    # analytics_q — newest green r6
-    "q_funnel",
-    "q_cohort_retention",
-    "q_twa",
-    "q_attribution",
-    "q_mad_outliers",
-    "q_gap_fill",
-    "q_asof_forward",
-    "q_triangles",
-    "q_funnel_horizon",
-    "q_dedup_keep_best",
-    "q_trend",
-    "q_pareto",
-    "q_rolling_distinct",
-    # ir_q — newest green r6
-    "q_inverted_index",
-    "q_bm25",
-    "q_pii_scrub",
-    "q_unigram_logprob",
-    "q_weighted_sample",
-    "q_pmi",
-    "q_neardup_incremental",
-    # mid-module r6-greens
-    "q_stream_join",
-    "q_udtf_rle",
-    "q_join_bucketed",
-    "q_orc_roundtrip",
-    # windows — newest green r6
-    "q_win_dedup_latest",
-    "q_win_rank",
-    "q_win_ntile",
-    "q_win_lag",
-    "q_win_running",
-    "q_win_range",
-    "q_win_firstlast",
-    "q_win_topk_group",
-    "q_join_asof",
-    # flagship — always in-window
-    "q_agg_group",
-    # fill: stalest r7-green in registration order
-    "q_hash_split",
-)
-# r8 rotation (VERDICT r7 #1) — executed, 50/50 green in
-# CORRECTNESS_r08 (window == this tuple exactly, judge-verified).
-# Kept for the ledger. Superseded by _R9_FRONT above.
-_R8_FRONT = (
-    # relational bulk — last green r5
-    "q_filter_in",
-    "q_filter_like",
-    "q_filter_between",
-    "q_filter_null",
-    "q_join_star",
-    "q_join_left",
-    "q_join_full",
-    "q_join_semi",
-    "q_join_anti",
-    "q_join_range",
-    "q_join_cross",
-    "q_join_self",
-    "q_agg_global",
-    "q_agg_countdistinct",
-    "q_agg_approx_cd",
-    "q_agg_having",
-    "q_sort",
-    "q_topk",
-    "q_limit_offset",
-    "q_union_all",
-    "q_union_distinct",
-    "q_intersect",
-    "q_except",
-    # aggregates — last green r5
-    "q_agg_groupingsets",
-    "q_agg_rollup",
-    "q_agg_cube",
-    "q_pivot",
-    "q_agg_stats",
-    "q_agg_median",
-    "q_agg_arrays",
-    "q_agg_maxby",
-    # flagship — always in-window
-    "q_agg_group",
-    # fill: stalest r6-green families
-    "q_neardup_clusters",
-    "q_salted_agg",
-    "q_rollup_cascade",
-    "q_reconcile",
-    "q_dq_report",
-    "q_scd2_merge",
-    "q_validate_rules",
-    "q_salted_join",
-    "q_quantile_sketch",
-    "q_unpivot",
-    "q_repetition_filter",
-    "q_entity_match",
-    # NEW r8 registrations (VERDICT r7 #2) — graded this round
-    "q_phash_neardup",
-    "q_audiofp_neardup",
-    "q_video_neardup",
-    "q_media_embed",
-    "q_neardup_stream_equiv",
-    "q_compact_corpus",
-)
-# r7 rotation (VERDICT r6 #1) — executed, 50/50 green in
-# CORRECTNESS_r07 (window == this tuple exactly, judge-verified).
-# Kept for the ledger. Superseded by _R8_FRONT above.
-_R7_FRONT = (
-    # scalars — last green r4
-    "q_str_funcs",
-    "q_str_regex",
-    "q_date_funcs",
-    "q_math_funcs",
-    "q_cond_funcs",
-    "q_casts",
-    "q_json_extract",
-    "q_array_funcs",
-    "q_array_lambda",
-    "q_map_funcs",
-    "q_hash",
-    # stream_equiv — last green r4
-    "q_stream_tumbling",
-    "q_stream_sliding",
-    "q_sessionize",
-    "q_dedup_exact",
-    "q_state_running",
-    # udfs — last green r4
-    "q_udf_scalar",
-    "q_pandas_udf",
-    "q_pandas_agg",
-    "q_applyinpandas_normalize",
-    "q_explode",
-    # sources_q — last green r4
-    "q_scan_project",
-    "q_csv_roundtrip",
-    "q_json_roundtrip",
-    "q_parquet_roundtrip",
-    "q_incremental_extract",
-    # llm tail — last green r4
-    "q_text_stats",
-    "q_token_count",
-    "q_ngrams",
-    "q_tfidf",
-    "q_embed_centroid",
-    # flagship — always in-window
-    "q_agg_group",
-    # fill: stalest r5-green families
-    "q_hash_split",
-    "q_stratified_sample",
-    "q_pack_sequences",
-    "q_decontaminate",
-    "q_lang_id",
-    "q_quality_score",
-    "q_multimodal_features",
-    "q_fingerprint",
-    "q_dedup_simhash",
-    "q_neardup_ngram",
-    "q_neardup_ngram_lsh",
-    "q_neardup_embed",
-    "q_dedup_hash",
-    "q_neardup_jaccard",
-    "q_simsearch_topk",
-    "q_project",
-    "q_filter_pred",
-    "q_join_inner",
-)
-# r6 rotation (VERDICT r5 #1) — executed, 50/50 green in
-# CORRECTNESS_r06; kept for the ledger (COVERAGE.md has per-query
-# rounds). Superseded by _R7_FRONT above.
-_R6_FRONT = (
-    # extras_q — r5 additions, never graded
-    "q_neardup_clusters",
-    "q_salted_agg",
-    "q_rollup_cascade",
-    "q_reconcile",
-    "q_dq_report",
-    "q_scd2_merge",
-    "q_validate_rules",
-    "q_salted_join",
-    "q_quantile_sketch",
-    "q_unpivot",
-    # textprep_q
-    "q_repetition_filter",
-    "q_chunk_docs",
-    "q_domain_mix",
-    # cdc_q
-    "q_snapshot_diff",
-    "q_sfid18",
-    "q_incremental_agg",
-    "q_entity_match",
-    # analytics_q
-    "q_funnel",
-    "q_cohort_retention",
-    "q_twa",
-    "q_attribution",
-    "q_mad_outliers",
-    "q_gap_fill",
-    "q_asof_forward",
-    "q_triangles",
-    "q_funnel_horizon",
-    "q_dedup_keep_best",
-    "q_trend",
-    "q_pareto",
-    "q_rolling_distinct",
-    # ir_q
-    "q_inverted_index",
-    "q_bm25",
-    "q_pii_scrub",
-    "q_unigram_logprob",
-    "q_weighted_sample",
-    "q_pmi",
-    "q_neardup_incremental",
-    # never-graded r5 additions buried mid-module
-    "q_stream_join",
-    "q_udtf_rle",
-    "q_join_bucketed",
-    "q_orc_roundtrip",
-    # anchors: stalest r4-green family (windows) — slots 42–50
-    "q_win_dedup_latest",
-    "q_win_rank",
-    "q_win_ntile",
-    "q_win_lag",
-    "q_win_running",
-    "q_win_range",
-    "q_win_firstlast",
-    "q_win_topk_group",
-    "q_join_asof",
+
+_MODULES = (
+    "sampling_q",
+    "corpus_q",
+    "relational",
+    "aggregates",
+    "llm_ext",
+    "llm",
+    "windows",
+    "scalars",
+    "stream_equiv",
+    "udfs",
+    "sources_q",
+    "extras_q",
+    "textprep_q",
+    "cdc_q",
+    "analytics_q",
+    "ir_q",
+    "media_q",
 )
 
 
@@ -775,10 +128,10 @@ def _ensure_loaded() -> None:
 
 def registry() -> dict[str, Query]:
     _ensure_loaded()
-    unknown = [n for n in _R14_FRONT if n not in _REGISTRY]
-    if unknown:  # typo guard: a misspelled front entry would silently
-        raise ValueError(f"_R14_FRONT names not registered: {unknown}")
-    front = {n: _REGISTRY[n] for n in _R14_FRONT}
+    unknown = [n for n in _FRONT if n not in _REGISTRY]
+    if unknown:  # typo guard: a misspelled name would silently leave the front
+        raise ValueError(f"_FRONT names not registered: {unknown}")
+    front = {n: _REGISTRY[n] for n in _FRONT}
     rest = {n: q for n, q in _REGISTRY.items() if n not in front}
     return {**front, **rest}
 

@@ -256,8 +256,8 @@ def q_win_topk_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 100 TB path is operators/asof.py::asof_backward_join — union both
 # sides, one hash shuffle on user_id, sortWithinPartitions(ts), and a
 # running last(... IGNORE NULLS) window: a merge join expressed
-# declaratively, proven ≡ this form in tests/test_asof.py and benched
-# round-over-round (q_join_asof entry in bench.py).
+# declaratively, proven ≡ this form in tests/test_asof.py and timed as
+# perfbench's queries.q_join_asof_s.
 # ---------------------------------------------------------------------------
 @register(
     "q_join_asof",

@@ -200,8 +200,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # UI off by default (port contention across parallel test
-        # sessions); tests/shuffle_audit.py opts in to read the
-        # /api/v1 stage-metrics endpoint.
+        # sessions); SPARK_GRAFT_UI=true opts in, for a caller that reads
+        # the /api/v1 stage-metrics endpoint (perfbench --trace 1).
         .config(
             "spark.ui.enabled",
             "true" if os.environ.get("SPARK_GRAFT_UI") == "true" else "false",

@@ -180,6 +180,15 @@ def _merge_sql(table: str, staging: str, cols: list[str], key_cols: list[str]) -
     )
 
 
+def _merge_stmt(dialect: str):
+    """The merge template of ``dialect``: ``postgresql`` → ON CONFLICT,
+    ``ansi`` → MERGE INTO."""
+    try:
+        return {"postgresql": _upsert_sql, "ansi": _merge_sql}[dialect]
+    except KeyError:
+        raise ValueError(f"unknown dialect: {dialect!r}") from None
+
+
 def upsert(
     df: DataFrame,
     url: str,
@@ -195,12 +204,7 @@ def upsert(
     ``createTableColumnTypes`` types them (see ``write_full``). The
     staging table is dropped whether or not the merge succeeds.
     """
-    if dialect == "postgresql":
-        merge_stmt = _upsert_sql
-    elif dialect == "ansi":
-        merge_stmt = _merge_sql
-    else:
-        raise ValueError(f"unknown dialect: {dialect!r}")
+    merge_stmt = _merge_stmt(dialect)
     staging = f"{_validate_table(table)}__staging"
     (
         df.write.format("jdbc")
@@ -320,12 +324,7 @@ def apply_cdc(
     idempotent (re-applying the same feed is a no-op), and the network
     cost is the CHANGE SET, never the table.
     """
-    if dialect == "postgresql":
-        merge_stmt = _upsert_sql
-    elif dialect == "ansi":
-        merge_stmt = _merge_sql
-    else:
-        raise ValueError(f"unknown dialect: {dialect!r}")
+    merge_stmt = _merge_stmt(dialect)
     payload_cols = [c for c in changes.columns if c != "change_type"]
     staging = f"{_validate_table(table)}__cdc_staging"
     (

@@ -46,7 +46,9 @@ import base64
 import datetime as _dt
 import decimal
 import json
+import os
 from collections.abc import Callable, Iterator, Sequence
+from itertools import islice
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
@@ -145,13 +147,46 @@ def _read_slice(
         yield tuple(c(rec.get(n)) for n, c in zip(names, convs))
 
 
+def _path_and_page_size(options: dict) -> tuple[str, int]:
+    page_size = int(options.get("page_size", "2000"))
+    if page_size <= 0:
+        raise ValueError("page_size must be positive")
+    return options["path"], page_size
+
+
+def _pages(path: str, start: int, end: int, page_size: int) -> list[_PagePartition]:
+    """Lay out the [start, end) byte range of the log as one partition
+    per ``page_size`` lines — metadata only, no record is parsed. A
+    page's byte length is the sum of its line lengths, so no ``tell()``
+    is asked per line."""
+    if start >= end:  # nothing (new) to read
+        return [_PagePartition(0, start, start)]
+    bounds = [start]
+    pos = start
+    with open(path, "rb") as f:
+        f.seek(start)
+        while pos < end:
+            page = sum(map(len, islice(f, page_size)))
+            if not page:
+                # EOF before the committed end offset: the append-only
+                # contract was violated (log truncated or replaced with a
+                # shorter file). Fail loudly — silently planning a short
+                # batch would lose the missing records forever.
+                raise ValueError(
+                    f"{path} ends at {pos} but offset {end} "
+                    "was committed: append-only log was truncated"
+                )
+            pos += page
+            if pos < end:
+                bounds.append(pos)
+    bounds.append(end)
+    return [_PagePartition(i, bounds[i], bounds[i + 1]) for i in range(len(bounds) - 1)]
+
+
 class SFModelReader(DataSourceReader):
     def __init__(self, schema: T.StructType, options: dict):
         self.schema = schema
-        self.path = options["path"]
-        self.page_size = int(options.get("page_size", "2000"))
-        if self.page_size <= 0:
-            raise ValueError("page_size must be positive")
+        self.path, self.page_size = _path_and_page_size(options)
         self.bounds: list[_Bound] = []
 
     def pushFilters(self, filters: list[Filter]) -> list[Filter]:
@@ -177,26 +212,9 @@ class SFModelReader(DataSourceReader):
         return filters
 
     def partitions(self) -> Sequence[InputPartition]:
-        # Driver-side metadata-only pass: byte offsets of page starts.
+        # Driver-side metadata-only pass over the whole log.
         # (Bulk API analog: list part files; REST analog: cursor plan.)
-        offsets = [0]
-        n_lines = 0
-        with open(self.path, "rb") as f:
-            for line in f:
-                n_lines += 1
-                if n_lines % self.page_size == 0:
-                    offsets.append(f.tell())
-        end = offsets.pop() if n_lines % self.page_size == 0 else None
-        with open(self.path, "rb") as f:
-            f.seek(0, 2)
-            file_end = f.tell()
-        bounds = offsets + [file_end if end is None else end]
-        if n_lines == 0:
-            return [_PagePartition(0, 0, 0)]
-        return [
-            _PagePartition(i, bounds[i], bounds[i + 1])
-            for i in range(len(bounds) - 1)
-        ]
+        return _pages(self.path, 0, os.path.getsize(self.path), self.page_size)
 
     def read(self, partition: _PagePartition) -> Iterator[tuple]:
         return _read_slice(
@@ -234,18 +252,13 @@ class SFModelStreamReader(DataSourceStreamReader):
 
     def __init__(self, schema: T.StructType, options: dict):
         self.schema = schema
-        self.path = options["path"]
-        self.page_size = int(options.get("page_size", "2000"))
-        if self.page_size <= 0:
-            raise ValueError("page_size must be positive")
+        self.path, self.page_size = _path_and_page_size(options)
         self._floor = 0  # highest offset ever returned — see latestOffset
 
     def initialOffset(self) -> dict:
         return {"pos": 0}
 
     def latestOffset(self) -> dict:
-        import os
-
         try:
             size = os.path.getsize(self.path)
         except FileNotFoundError:
@@ -279,32 +292,7 @@ class SFModelStreamReader(DataSourceStreamReader):
         return {"pos": self._floor}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        s, e = int(start["pos"]), int(end["pos"])
-        if s >= e:  # no new complete lines this batch
-            return [_PagePartition(0, s, s)]
-        bounds = [s]
-        n = 0
-        with open(self.path, "rb") as f:
-            f.seek(s)
-            while f.tell() < e:
-                if not f.readline():
-                    # EOF before the committed end offset: the
-                    # append-only contract was violated (log truncated
-                    # or replaced with a shorter file). Fail loudly —
-                    # silently planning a short batch would lose the
-                    # missing records forever.
-                    raise ValueError(
-                        f"{self.path} ends at {f.tell()} but offset {e} "
-                        "was committed: append-only log was truncated"
-                    )
-                n += 1
-                if n % self.page_size == 0 and f.tell() < e:
-                    bounds.append(f.tell())
-        bounds.append(e)
-        return [
-            _PagePartition(i, bounds[i], bounds[i + 1])
-            for i in range(len(bounds) - 1)
-        ]
+        return _pages(self.path, int(start["pos"]), int(end["pos"]), self.page_size)
 
     def read(self, partition: _PagePartition) -> Iterator[tuple]:
         return _read_slice(self.path, self.schema, partition.start, partition.end)

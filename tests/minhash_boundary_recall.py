@@ -8,9 +8,10 @@ MinHash-banded twins (q_neardup_minhash, q_neardup_cross_lsh,
 q_neardup_clusters_lsh, q_neardup_ngram_lsh) carry the same class of
 tail in principle but had never measurably missed — an adversarial
 random draw away from a confusing sweep red. This script constructs
-the regime DELIBERATELY, mirroring semdedup_skew_recall_curve.py's
-method: a seeded corpus whose true pairs sit EXACTLY at the Jaccard
-threshold, where the banding miss probability is maximal and analytic.
+the regime DELIBERATELY, mirroring the SemDeDup skew-recall curve's
+method (SCALE.md r12): a seeded corpus whose true pairs sit EXACTLY at
+the Jaccard threshold, where the banding miss probability is maximal
+and analytic.
 
 Banding math. With r rows/band and b bands, a pair at Jaccard J
 collides in a given band w.p. J^r, so the per-pair MISS probability is

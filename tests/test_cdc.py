@@ -318,3 +318,28 @@ class TestApplyCdcJdbc:
         feed = snapshot_diff(old, old, ["id"], include_values=True)
         apply_cdc(feed, self.URL, "mirror_e", ["id"], self.PROPS, dialect="ansi")
         assert self._mirror(spark, "mirror_e") == {1: ("x", 1.0)}
+
+    @pytest.mark.parametrize("fn", ["upsert", "apply_cdc"])
+    def test_unknown_dialect_rejected_before_staging(self, spark, fn):
+        from salesforce_postgresql_etl_spark.sources import jdbc  # noqa: PLC0415
+
+        df = _frame(spark, [(1, "x", 1.0)])
+        table = f"mirror_bogus_{fn}"
+        jdbc.write_full(df, self.URL, table, self.PROPS)
+        arg = df.withColumn("change_type", F.lit("insert")) if fn == "apply_cdc" else df
+        with pytest.raises(ValueError, match="unknown dialect: 'bogus'"):
+            getattr(jdbc, fn)(arg, self.URL, table, ["id"], self.PROPS, dialect="bogus")
+
+        conn = spark._jvm.java.sql.DriverManager.getConnection(self.URL)
+        try:
+            rs = conn.createStatement().executeQuery(
+                "SELECT TABLENAME FROM SYS.SYSTABLES "
+                f"WHERE TABLENAME LIKE '{table.upper()}%'"
+            )
+            tables = []
+            while rs.next():
+                tables.append(rs.getString(1))
+        finally:
+            conn.close()
+        assert tables == [table.upper()]
+        assert self._mirror(spark, table) == {1: ("x", 1.0)}

@@ -147,3 +147,19 @@ def test_dtype_lattice_matches_oracle(name, spark, duck):
         f"[{name}] dtype skew vs oracle (spark, duck): {skew} — pin casts "
         "on both sides; the driver's value-hash is dtype-sensitive"
     )
+
+
+def test_query_order_is_pinned():
+    # The order of ``queries()`` is kept fixed (queries/__init__.py
+    # _FRONT): slot 1, slot 50 and four queries in the first 50 are pinned,
+    # and ``oracle_sql()`` lists its names in the same order.
+    import __spark_entry__
+
+    names = list(__spark_entry__.queries())
+    assert names[0] == "q_parquet_roundtrip"
+    assert names[49] == "q_agg_group"
+    for q in ("q_entity_match", "q_join_star", "q_neardup_clusters",
+              "q_repetition_filter"):
+        assert q in names[:50], q
+    oracled = list(__spark_entry__.oracle_sql())
+    assert oracled == [n for n in names if n in set(oracled)]

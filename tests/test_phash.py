@@ -184,8 +184,8 @@ def test_phash_neardup_persist_equivalence(spark):
     """persist=True (decode-once checkpoint, the default) and
     persist=False (lazy lineage, decoded per join side) are the same
     operator — identical pair sets. The difference is plan shape only:
-    measured in tests/perceptual_audit.py, the lazy form ran TWO
-    MapInPandas decode nodes with zero ReusedExchange."""
+    measured on the final plans, the lazy form ran TWO MapInPandas
+    decode nodes with zero ReusedExchange."""
     rows = [
         (mid, "image", encode_bmp(_scene(mid // 2)), (None, None, None, "bmp"))
         for mid in range(8)

@@ -85,7 +85,7 @@ _GRANULARITY_SENSITIVE = {"q_quantile_sketch"}
 #   SKEW=0.99, ~99% of vectors form ONE natural cluster that k=8
 #   k-means must split; split-straddling pairs are invisible to any
 #   within-cluster scan (measured: recall 0.901, precision 1.0, seed
-#   9173; full recall(k) curve in tests/semdedup_skew_recall_curve.py).
+#   9173; full recall(k) curve in SCALE.md r12).
 #   Moderate floor 1.0 — no natural cluster is split at these
 #   densities (the r11 twelve-dataset record); adversarial floor 0.8
 #   — an implementation regression craters far below the measured

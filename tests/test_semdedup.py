@@ -196,8 +196,8 @@ def test_unimodal_corpus_recall_vs_lsh_control(spark):
     (recall < 1), while the sign-plane LSH twin on the SAME corpus
     finds every brute pair (recall == 1 — its recall is geometry-
     bound, not cluster-bound). Precision stays exact for both. The
-    full recall(k) curve lives in tests/semdedup_skew_recall_curve.py;
-    the strategy-choice consequence is in SCALE.md r12."""
+    full recall(k) curve and the strategy-choice consequence are in
+    SCALE.md r12."""
     import math
     import random
 

@@ -84,6 +84,45 @@ def test_page_per_partition(spark, jsonl):
     assert _reader(spark, jsonl, page_size=100).rdd.getNumPartitions() == 1
 
 
+@pytest.mark.parametrize("trailing_newline", [True, False])
+@pytest.mark.parametrize("page_size", [1, 4, 5, 100])
+def test_batch_and_stream_lay_out_the_same_pages(tmp_path, page_size, trailing_newline):
+    from salesforce_postgresql_etl_spark.sources.sf_datasource import (
+        SFModelReader,
+        SFModelStreamReader,
+    )
+
+    lines = [json.dumps(r).encode() + b"\n" for r in RECORDS]
+    if not trailing_newline:
+        lines[-1] = lines[-1].rstrip(b"\n")
+    p = tmp_path / "log.jsonl"
+    p.write_bytes(b"".join(lines))
+    size = p.stat().st_size
+    # independent layout: a page ends after every page_size-th line
+    ends = [sum(map(len, lines[: i + 1])) for i in range(len(lines))]
+    cuts = [0] + ends[page_size - 1 : -1 : page_size] + [size]
+    want = list(zip(cuts, cuts[1:]))
+
+    opts = {"path": str(p), "page_size": str(page_size)}
+    batch = [(q.start, q.end) for q in SFModelReader(None, opts).partitions()]
+    stream = [
+        (q.start, q.end)
+        for q in SFModelStreamReader(None, opts).partitions({"pos": 0}, {"pos": size})
+    ]
+    assert batch == stream == want
+
+
+def test_stream_partitions_reject_a_truncated_log(tmp_path):
+    from salesforce_postgresql_etl_spark.sources.sf_datasource import SFModelStreamReader
+
+    p = tmp_path / "log.jsonl"
+    p.write_text("".join(json.dumps(r) + "\n" for r in RECORDS))
+    size = p.stat().st_size
+    reader = SFModelStreamReader(None, {"path": str(p), "page_size": "4"})
+    with pytest.raises(ValueError, match=f"ends at {size} but offset {size + 10}"):
+        reader.partitions({"pos": 0}, {"pos": size + 10})
+
+
 def test_empty_extract(spark, tmp_path):
     p = tmp_path / "empty.jsonl"
     p.write_text("")
